@@ -39,7 +39,9 @@ _PARAM_MAP = {
     "as_of": "as_of",
 }
 
-_DISPATCH = {
+# request type -> operator; the registry's parity entries are these
+# plus the two "-avg" twins (plans/registry.py)
+REQUEST_TYPES = {
     "cat": simple.q_cat,
     "mag-cat": simple.q_mag_cat,
     "fab-cat": simple.q_fab_cat,
@@ -68,7 +70,7 @@ def run_query(
         spark, f"{sf_dir}/lineitem.parquet"
     ):
         raise StoreNotFoundError(f"no warehouse at {sf_dir}")
-    if type_param not in _DISPATCH:
+    if type_param not in REQUEST_TYPES:
         raise UnknownQueryTypeError(f"unknown query type: {type_param!r}")
     unknown = set(request_params) - set(_PARAM_MAP)
     if unknown:
@@ -76,7 +78,7 @@ def run_query(
     kwargs = {
         _PARAM_MAP[k]: v for k, v in request_params.items() if v is not None
     }
-    fn = _DISPATCH[type_param]
+    fn = REQUEST_TYPES[type_param]
     import inspect
 
     accepted = set(inspect.signature(fn).parameters)

@@ -68,32 +68,6 @@ from pyspark.sql import functions as F
 
 __all__ = ["UnitSum", "units", "fixed_point_agg"]
 
-import os
-
-# bisect switch (round-8): "persum" = r7 per-sum violation counters,
-# "combined" = one OR-fused counter, "off" = no guard (measurement only).
-# Validated at import (round-9, advisor item): an unknown value used to
-# add no __v_* partials yet still take the combined assert branch, so
-# every sums query died with a confusing unresolved-column error — and
-# a leaked bisect "off" could silently disable the overflow guard.
-_GUARD_MODE = os.environ.get("SPARK_GRAFT_FXP_GUARD", "combined")
-if _GUARD_MODE not in ("combined", "persum", "off"):
-    raise ValueError(
-        f"SPARK_GRAFT_FXP_GUARD={_GUARD_MODE!r} is not one of "
-        "combined/persum/off (case-sensitive) — refusing to guess "
-        "which overflow-guard shape was meant"
-    )
-if _GUARD_MODE == "off":
-    import warnings
-
-    warnings.warn(
-        "SPARK_GRAFT_FXP_GUARD=off: the fixed-point overflow guard is "
-        "DISABLED — long partials can wrap silently if a declared "
-        "max_units understates the data. Measurement runs only.",
-        RuntimeWarning,
-        stacklevel=1,
-    )
-
 _BLOCK_COL = "__fxp_blk"
 # monotonically_increasing_id: partition id << 33 | per-partition seq
 _MAX_BLOCK_BITS = 33
@@ -179,32 +153,14 @@ def fixed_point_agg(
     partial_aggs: list[Column] = []
     for s in sums:
         partial_aggs.append(F.sum(s.unit_expr).alias(f"__u_{s.alias}"))
-        if _GUARD_MODE == "persum":
-            # round-7 shape: one counter buffer PER SUM. Kept for A/B
-            # measurement; costs one extra long agg buffer update per
-            # row per sum (measured ~11% on the 6-sum pricing query,
-            # docs/SCALE.md round-8 bisect).
-            partial_aggs.append(
-                F.sum(
-                    F.when(
-                        F.abs(s.unit_expr) > F.lit(int(s.max_units)), 1
-                    ).otherwise(0)
-                )
-                .cast("long")
-                .alias(f"__v_{s.alias}")
-            )
-    if sums and _GUARD_MODE == "combined":
-        # runtime bound guard (round-7 advisor fix, re-shaped round 8):
-        # the overflow proof rests on the caller's max_units — a
-        # declared bound that understates the data would let the long
-        # partials wrap SILENTLY under non-ANSI sum. Count violating
-        # rows in the same partial pass and fail loudly at the merge.
-        # Round-8 reshape: ONE OR-fused counter for all sums instead of
-        # one buffer per sum — the per-row cost of the r7 shape was the
-        # N extra aggregation-buffer updates, not the comparisons
-        # (bisect measurements in docs/SCALE.md). Loud-failure
-        # semantics are identical; only the message loses the name of
-        # the specific offending sum.
+    if sums:
+        # runtime bound guard: the overflow proof rests on the caller's
+        # max_units — a declared bound that understates the data would
+        # let the long partials wrap SILENTLY under non-ANSI sum. Count
+        # violating rows in the same partial pass and fail loudly at
+        # the merge. ONE OR-fused counter for all sums: a buffer per
+        # sum costs N extra aggregation-buffer updates per row
+        # (measured ~11% on the 6-sum pricing query, docs/SCALE.md).
         viol = F.lit(False)
         for s in sums:
             viol = viol | (F.abs(s.unit_expr) > F.lit(int(s.max_units)))
@@ -234,13 +190,7 @@ def fixed_point_agg(
         if s.scale:
             acc = acc / F.lit(10**s.scale)
         final_aggs.append(acc.alias(s.alias))
-        if _GUARD_MODE == "persum":
-            final_aggs.append(
-                F.coalesce(F.sum(f"__v_{s.alias}"), F.lit(0).cast("long")).alias(
-                    f"__v_{s.alias}"
-                )
-            )
-    if sums and _GUARD_MODE == "combined":
+    if sums:
         final_aggs.append(
             F.coalesce(F.sum("__v_all"), F.lit(0).cast("long")).alias("__v_all")
         )
@@ -269,38 +219,24 @@ def fixed_point_agg(
     # its group saw any |units| > max_units row, and the __v columns
     # never leave this function. assert_true returns NULL on pass,
     # so the WHEN wrapper is the identity on the happy path.
-    if _GUARD_MODE == "off":
-        return result
+    sum_aliases = {s.alias for s in sums}
     out_cols: list[Column] = []
     for c in result.columns:
         if c.startswith("__v_"):
             continue
-        s = next((x for x in sums if x.alias == c), None)
-        if s is None:
+        if c not in sum_aliases:
             out_cols.append(F.col(c))
             continue
-        if _GUARD_MODE == "persum":
-            chk = F.assert_true(
-                F.col(f"__v_{c}") == F.lit(0),
-                F.lit(
-                    f"fixed_point_agg: rows with |units| > max_units="
-                    f"{int(s.max_units)} reached sum {c!r} — the declared "
-                    "per-row bound understates the data and the long "
-                    "partials may have wrapped; raise max_units (smaller "
-                    "blocks merely add partials, never lose exactness)"
-                ),
-            )
-        else:
-            chk = F.assert_true(
-                F.col("__v_all") == F.lit(0),
-                F.lit(
-                    "fixed_point_agg: at least one row exceeded its "
-                    "sum's declared max_units — a per-row unit bound "
-                    "understates the data and the long partials may "
-                    "have wrapped; raise the offending max_units "
-                    "(smaller blocks merely add partials, never lose "
-                    "exactness)"
-                ),
-            )
+        chk = F.assert_true(
+            F.col("__v_all") == F.lit(0),
+            F.lit(
+                "fixed_point_agg: at least one row exceeded its "
+                "sum's declared max_units — a per-row unit bound "
+                "understates the data and the long partials may "
+                "have wrapped; raise the offending max_units "
+                "(smaller blocks merely add partials, never lose "
+                "exactness)"
+            ),
+        )
         out_cols.append(F.when(chk.isNull(), F.col(c)).alias(c))
     return result.select(*out_cols)

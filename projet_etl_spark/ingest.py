@@ -41,11 +41,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("csv_dir", help="directory holding produits-tous.csv and "
                                    "pointsDeVente-tous.csv")
     p.add_argument("out_dir", help="warehouse directory to (re)create")
-    p.add_argument(
-        "--flat",
-        action="store_true",
-        help="write unpartitioned parquet (skip the yyyy-MM partitioning)",
-    )
     return p
 
 
@@ -69,9 +64,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 spark, os.path.join(args.csv_dir, fname), schema
             )
             dst = os.path.join(args.out_dir, table)
-            write_table(
-                df, dst, partition_by_month_of=None if args.flat else "dateid"
-            )
+            write_table(df, dst, partition_by_month_of="dateid")
             n = spark.read.parquet(dst).count()
             print(f"{table}: {n} rows -> {dst}")
     finally:

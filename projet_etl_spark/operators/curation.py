@@ -172,65 +172,6 @@ def q_sample_weighted_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_text_chunks_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Python UDTF twin of ``q_text_chunks`` — the table-function API
-    surface (Spark 4 ``@udtf`` + ``LATERAL``), pinned by a pytest
-    equality test against the pure-SQL chunker rather than registered
-    (the HLL/approx-twin convention: the registry keeps the JVM-side
-    plan as the production path; the twin proves the API wiring).
-
-    The UDTF yields one row per chunk from a single Arrow-batched
-    pass (``useArrow=True`` — never row-at-a-time pickling), with the
-    tokenize/stride/fingerprint logic mirroring tokens()/CHUNK_SIZE/
-    CHUNK_OVERLAP; any drift fails the equality pin. At scale the
-    lateral expansion is map-only, exactly like the posexplode plan.
-    """
-    import hashlib
-    import re
-
-    from pyspark.sql.functions import udtf
-
-    size, overlap = CHUNK_SIZE, CHUNK_OVERLAP
-    stride = size - overlap
-
-    @udtf(
-        returnType=(
-            "doc_id bigint, chunk_idx bigint, start_tok bigint, "
-            "n_tokens bigint, chunk_fp string"
-        ),
-        useArrow=True,
-    )
-    class ChunkTokens:
-        def eval(self, doc_id, text):
-            if text is None:
-                return  # SQL chunker drops NULL-text rows
-            # mirrors functions.text.tokens() EXACTLY: Spark trim()
-            # strips only ASCII space, and Java \s is the ASCII class
-            # [ \t\n\x0b\f\r] — Python's .strip()/\s are Unicode-wide
-            # and would diverge on tabs at the edges or NBSP inside
-            toks = re.split(
-                "[ \t\n\x0b\f\r]+", text.strip(" ").lower()
-            )
-            n = len(toks)
-            k = 0
-            for start in range(0, n, stride):
-                if start > 0 and start + overlap >= n:
-                    break  # pure-suffix tail chunk is dropped
-                chunk = toks[start : start + size]
-                fp = hashlib.md5(" ".join(chunk).encode("utf-8")).hexdigest()
-                yield doc_id, k, start, len(chunk), fp
-                k += 1
-
-    spark.udtf.register("chunk_tokens", ChunkTokens)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "_chunk_src"
-    )
-    return spark.sql(
-        "SELECT c.doc_id, c.chunk_idx, c.start_tok, c.n_tokens, c.chunk_fp "
-        "FROM _chunk_src m, LATERAL chunk_tokens(m.doc_id, m.text) c"
-    )
-
-
 # --- data-mixture resampling weights ------------------------------------
 
 # target language mixture in integer percent (sums to 100) — integer

@@ -1090,87 +1090,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# signature word layout: RP_BITS bits split across fixed-width words
-# so NO plane is dropped — a single int64 silently truncated planes
-# 0-7 of the 72 (r12 advisor, low). Word w carries bands
-# [w*RP_BANDS/WORDS, (w+1)*RP_BANDS/WORDS), i.e. 36 bits each at the
-# current 12 x 6 geometry — always < 63, so the pack is exact.
-RP_SIG_WORDS = 2
-assert RP_BANDS % RP_SIG_WORDS == 0
-_RP_BANDS_PER_WORD = RP_BANDS // RP_SIG_WORDS
-assert _RP_BANDS_PER_WORD * RP_BAND_BITS < 63, "word must fit a signed long"
-
-
-def rp_signatures_arrow(emb: DataFrame) -> DataFrame:
-    """(vec_id, sig array<long>) RP_BITS-bit random-hyperplane
-    signatures via ONE Arrow-batched numpy matmul per batch — the
-    production scale path for the signature pass. The signature is
-    packed into RP_SIG_WORDS 36-bit words so all RP_BITS planes are
-    carried (r12 advisor, low: the previous single-int64 pack
-    silently dropped planes 0-7).
-
-    The registry query keeps the JVM fold form because its
-    left-to-right float association is what the DuckDB oracle
-    replays; numpy's blocked summation can differ by ~1 ulp, which
-    only matters for a dot EXACTLY at the sign boundary. Real
-    embedding dots sit far from 0 (the fixture's closest |dot| is
-    checked by tests/test_round6b_ops.py, which pins this twin
-    bit-identical to the fold path), so at 100 TB this is the pass
-    to run: ~0.6 ms/row of interpreted higher-order-function fold
-    becomes one BLAS matmul per Arrow batch.
-    """
-    import numpy as np
-    import pandas as pd
-
-    w = np.array(
-        [
-            [float(rp_weight(h, i)) for i in range(1, 65)]
-            for h in range(RP_BITS)
-        ]
-    ).T  # 64 x RP_BITS
-    per_word = _RP_BANDS_PER_WORD * RP_BAND_BITS
-
-    def batches(it):
-        for pdf in it:
-            mat = np.vstack(pdf["v"].to_numpy())  # n x 64
-            bits = (mat.astype(np.float64) @ w) >= 0  # n x RP_BITS
-            words = np.zeros((len(pdf), RP_SIG_WORDS), dtype=np.int64)
-            for wd in range(RP_SIG_WORDS):
-                sig = np.zeros(len(pdf), dtype=np.int64)
-                for h in range(wd * per_word, (wd + 1) * per_word):
-                    sig = (sig << 1) | bits[:, h].astype(np.int64)
-                words[:, wd] = sig
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "sig": list(words)}
-            )
-
-    return emb.select("vec_id", "v").mapInPandas(
-        batches, "vec_id long, sig array<long>"
-    )
-
-
-def rp_signatures_fold(emb: DataFrame) -> DataFrame:
-    """(vec_id, sig array<long>) via the oracle-exact fold dots — the
-    band keys' bit source packed into the same RP_SIG_WORDS 36-bit
-    words as the Arrow twin (all RP_BITS planes carried)."""
-    bands = _rp_band_keys(emb)
-    sorted_bk = F.array_sort(F.collect_list(F.struct("band", "key")))
-
-    def word(wd: int):
-        lo, hi = wd * _RP_BANDS_PER_WORD, (wd + 1) * _RP_BANDS_PER_WORD
-        return F.aggregate(
-            F.filter(
-                sorted_bk, lambda x: (x["band"] >= lo) & (x["band"] < hi)
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: F.shiftleft(acc, RP_BAND_BITS)
-            .bitwiseOR(x["key"].cast("long")),
-        )
-
-    packed = F.array(*[word(wd) for wd in range(RP_SIG_WORDS)])
-    return bands.groupBy("vec_id").agg(packed.alias("sig"))
-
-
 # --- prefix-filtered exact jaccard join -------------------------------
 
 # JACCARD_THRESHOLD as an exact rational, for integer prefix-length

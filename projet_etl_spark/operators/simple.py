@@ -45,23 +45,6 @@ def q_fab_cat(spark: SparkSession, sf_dir: str, *, cat_id=None) -> DataFrame:
     )
 
 
-def q_mag_cat_approx(spark: SparkSession, sf_dir: str, *, cat_id=None) -> DataFrame:
-    """approx_count_distinct variant of mag-cat (SURVEY.md §2.4 A1):
-    the 100 TB opt-in — HyperLogLog++ sketches merge map-side, so the
-    distinct count costs one normal aggregation instead of an Expand
-    shuffle of the raw values. No DuckDB oracle: HLL estimates are
-    implementation-specific (driver records the rows-only check).
-    """
-    cat_id = cat_id if cat_id is not None else DEFAULTS["cat_id"]
-    return (
-        points_de_vente(spark, sf_dir)
-        .filter(F.col("catid") == F.lit(cat_id))
-        .agg(
-            F.approx_count_distinct("magid", rsd=0.02).alias("total_magasins_approx")
-        )
-    )
-
-
 def q_avg_prod_per_fab(
     spark: SparkSession,
     sf_dir: str,

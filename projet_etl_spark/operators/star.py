@@ -527,8 +527,6 @@ def q_top_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- customer spend deciles -----------------------------------------
 
-_DECILE_QS = [round(0.1 * i, 1) for i in range(1, 10)]
-
 
 def q_customer_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution of customer lifetime spend across deciles:
@@ -554,8 +552,7 @@ def q_customer_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduced immediately to a 9-value row; bucket assignment is a
     per-row expression against the broadcast boundaries; the final
     rollup groups nine rows. At extreme customer cardinality swap
-    the boundary step for `approx_percentile` (docs/SCALE.md) — the
-    tolerance twin is pinned in tests/test_round6_ops.py.
+    the boundary step for `approx_percentile` (docs/SCALE.md).
     """
     spend = (
         load_table(spark, sf_dir, "orders")
@@ -606,60 +603,6 @@ def q_customer_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engine-wide rule is "exact DECIMAL internals, DOUBLE in the final
     # projection" (adjudicated by the money-twin-decimal /
     # money-twin-double A/B pair; see docs/SCALE.md).
-    return (
-        bucketed.groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_customers"),
-            F.min("spend").cast("double").alias("min_spend"),
-            F.max("spend").cast("double").alias("max_spend"),
-            F.sum("spend").cast("decimal(18,2)").cast("double").alias("total_spend"),
-        )
-        .orderBy("decile")
-    )
-
-
-# accuracy knob for the approx twin: 1/accuracy relative rank error
-DECILE_APPROX_ACCURACY = 10_000
-
-
-def q_customer_spend_deciles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-based twin of q_customer_spend_deciles for extreme
-    customer cardinality: boundaries come from `approx_percentile`
-    (KLL/GK-style mergeable sketch — map-side partials, NO
-    single-partition order-statistics step at all), everything else
-    is the same broadcast-boundary bucket assignment.
-
-    Library helper, not a registry entry: the sketch's boundaries are
-    rank-approximate so no SQL oracle can hash-match it; its contract
-    (10 buckets, conserved customer count and spend total, per-bucket
-    counts within the sketch's rank-error envelope) is pinned by
-    tests/test_round6_ops.py instead — same discipline as the HLL
-    distinct-count helpers.
-    """
-    spend = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_custkey",
-            F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
-        )
-        .groupBy("o_custkey")
-        .agg(F.sum("p").cast("decimal(18,2)").alias("spend"))
-        .select("o_custkey", "spend", F.col("spend").cast("double").alias("spend_d"))
-    )
-    qs = ", ".join(str(q) for q in _DECILE_QS)
-    bounds = spend.agg(
-        F.expr(
-            f"approx_percentile(spend_d, array({qs}), {DECILE_APPROX_ACCURACY})"
-        ).alias("bs")
-    )
-    bucketed = spend.crossJoin(F.broadcast(bounds)).select(
-        "spend",
-        F.size(F.filter("bs", lambda b: F.col("spend_d") > b))
-        .cast("long")
-        .alias("decile"),
-    )
-    # same DOUBLE output contract as the exact twin (schema parity —
-    # the tolerance test compares the two bucket-for-bucket)
     return (
         bucketed.groupBy("decile")
         .agg(

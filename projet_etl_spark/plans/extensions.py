@@ -35,7 +35,6 @@ from projet_etl_spark.operators import (
     quality_model,
     similarity,
     sketches,
-    simple,
     stats,
     textstats,
     timeseries,
@@ -5131,14 +5130,12 @@ def build():
             _CORPUS_SQL.format(cutoff=corpus.QUALITY_CUTOFF),
             ("pipeline",),
         ),
-        # (the HLL approx twins — simple.q_mag_cat_approx,
-        # events_windows.q_rolling_active_users_approx — are library
-        # helpers, not registry queries: their estimates are
-        # engine-specific so they can never be oracle-green, and a
+        # (the HLL approx twin events_windows.q_rolling_active_users_approx
+        # is a library helper, not a registry query: its estimates are
+        # engine-specific so it can never be oracle-green, and a
         # permanent rows-only row reads as an error in the driver's
-        # correctness artifact. Accuracy vs the exact twins is pinned
-        # by tests/test_quirks.py::test_approx_distinct_close_to_exact
-        # and test_scale_patterns.py::test_rolling_approx_within_tolerance.)
+        # correctness artifact. Accuracy vs the exact twin is pinned by
+        # test_scale_patterns.py::test_rolling_approx_within_tolerance.)
         # iterative fixpoint on the Spark side; the oracle states the
         # same components as a recursive transitive closure
         ("dedup-clusters", clusters.q_dedup_clusters, _CLUSTERS_SQL, ("dedup",)),

@@ -14,7 +14,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from projet_etl_spark.operators import composite, simple, timeseries, topk
+from projet_etl_spark.api import REQUEST_TYPES
+from projet_etl_spark.operators import composite
 from projet_etl_spark.plans.oracles import PARITY_ORACLES
 from projet_etl_spark.session import ensure_engine_conf
 
@@ -38,19 +39,11 @@ def _wrap(fn) -> QueryFn:
     return run
 
 
+# the reference-parity entries: every request type, plus the two
+# "-avg" twins the request API does not serve
 _PARITY_FNS: dict[str, Callable] = {
-    "cat": simple.q_cat,
-    "mag-cat": simple.q_mag_cat,
-    "fab-cat": simple.q_fab_cat,
-    "avg-prod-per-fab": simple.q_avg_prod_per_fab,
-    "top-magasins": topk.q_top_magasins,
-    "top-magasins-cat": topk.q_top_magasins_cat,
-    "top-1": topk.q_top_1,
-    "nb-mag-cat-date": timeseries.q_nb_mag_cat_date,
-    "score-evolution": timeseries.q_score_evolution,
-    "avg-cat-fab-10-mag": composite.q_avg_cat_fab_10_mag,
+    **REQUEST_TYPES,
     "avg-cat-fab-10-mag-avg": composite.q_avg_cat_fab_10_mag_avg,
-    "score-sante-touts-les-mois": composite.q_score_sante_mois,
     "score-sante-touts-les-mois-avg": composite.q_score_sante_mois_avg,
 }
 

@@ -164,85 +164,26 @@ def _probe_first_lines_hadoop(spark: SparkSession, path: str) -> dict[str, str]:
     return out
 
 
-def write_table(
-    df: DataFrame,
-    path: str,
-    partition_by_month_of: str | None = None,
-    mode: str = "overwrite",
-) -> None:
+def write_table(df: DataFrame, path: str, partition_by_month_of: str) -> None:
     """Parquet sink with overwrite semantics (reference data.py:41-42
-    ``if_exists='replace'``), optionally partitioned by 'yyyy-MM' of a
-    date column for partition pruning at scale.
+    ``if_exists='replace'``), partitioned by 'yyyy-MM' of a date
+    column for partition pruning at scale.
 
-    Partitioned writes also sort rows within each task by the date
-    column: inside a month partition the parquet row groups then carry
-    tight min/max stats on the date, so day-level predicates skip row
-    groups the scan never decompresses — the second pruning tier after
+    Rows are also sorted within each task by the date column: inside
+    a month partition the parquet row groups then carry tight min/max
+    stats on the date, so day-level predicates skip row groups the
+    scan never decompresses — the second pruning tier after
     directory-level partition pruning.
     """
-    writer = df.write.mode(mode)
-    if partition_by_month_of is not None:
-        df = (
-            df.withColumn(
-                "month", F.date_format(F.col(partition_by_month_of), "yyyy-MM")
-            )
-            .sortWithinPartitions("month", partition_by_month_of)
-        )
-        writer = df.write.mode(mode).partitionBy("month")
-    writer.parquet(path)
-
-
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "overwrite",
-    properties: dict[str, str] | None = None,
-    num_partitions: int | None = None,
-) -> None:
-    """SQL-database sink — parity with the reference's ``to_sql`` into
-    SQLite (reference data.py:41-42, ``if_exists='replace'``).
-
-    Thin wrapper over Spark's JDBC writer: the target database's JDBC
-    driver jar must be on the executor classpath (``spark.jars`` /
-    ``--packages``); this container ships no driver jars, so calls
-    here surface the JVM's "No suitable driver" error (the wrapper is
-    exercised by a test that asserts exactly that). ``num_partitions``
-    caps concurrent connections — a 1000-executor cluster writing
-    through one JDBC endpoint must throttle, not open one connection
-    per task.
-    """
-    writer = df.coalesce(num_partitions) if num_partitions else df
     (
-        writer.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .options(**(properties or {}))
-        .mode(mode)
-        .save()
+        df.withColumn(
+            "month", F.date_format(F.col(partition_by_month_of), "yyyy-MM")
+        )
+        .sortWithinPartitions("month", partition_by_month_of)
+        .write.mode("overwrite")
+        .partitionBy("month")
+        .parquet(path)
     )
-
-
-def read_jsonl(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """JSON-lines source with an explicit schema (no inference pass —
-    at 100 TB a schema-inference read doubles the scan)."""
-    return spark.read.schema(schema).json(path)
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink (columnar alternative; same predicate-pushdown and
-    column-pruning behavior as parquet in Spark's readers)."""
-    df.write.mode(mode).orc(path)
-
-
-def read_orc(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    return spark.read.schema(schema).orc(path)
 
 
 # a swap lock fresher than this marks an IN-FLIGHT publish; the lock

@@ -90,3 +90,43 @@ def test_query_cli_error_codes(spark, tmp_path, capsys):
     )  # 404
     assert main(["cat", "--sf-dir", SF_SMALL, "--param", "junk"], spark=spark) == 2
     capsys.readouterr()  # drain stderr
+
+
+def test_registry_parity_entries_are_the_request_types():
+    """One dispatch table: the registry's parity entries are the
+    request API's types plus the two "-avg" twins, served by the
+    same operator functions."""
+    from projet_etl_spark.api import REQUEST_TYPES
+    from projet_etl_spark.plans.registry import REGISTRY
+
+    parity = {n: s for n, s in REGISTRY.items() if "parity" in s.tags}
+    twins = {"avg-cat-fab-10-mag-avg", "score-sante-touts-les-mois-avg"}
+    assert set(parity) == set(REQUEST_TYPES) | twins
+    for name, fn in REQUEST_TYPES.items():
+        assert parity[name].raw_fn is fn, name
+
+
+def test_package_reads_only_deployment_settings():
+    """The package's only environment inputs are the six deployment
+    settings; no bisect switch, variant selector or plug-in hook. Any
+    use of ``environ``/``getenv`` other than a read with a literal
+    key shows up as an unresolved entry."""
+    import os
+    import re
+
+    import projet_etl_spark
+
+    root = os.path.dirname(projet_etl_spark.__file__)
+    names = set()
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            src = open(os.path.join(dirpath, f), encoding="utf-8").read()
+            for m in re.finditer(r"\b(?:environ|getenv)\b(.{0,40})", src, re.S):
+                key = re.match(r'(?:\.get\(|\[|\()\s*"(\w+)"', m.group(1))
+                names.add(key.group(1) if key else f"<unresolved in {f}>")
+    assert names == {
+        f"SPARK_GRAFT_{s}"
+        for s in ("CPUS", "MASTER", "SHUFFLE", "DRIVER_MEM", "LEASE_TTL_SEC", "SF_DIR")
+    }

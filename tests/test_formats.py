@@ -1,19 +1,11 @@
-"""Source/sink breadth: ORC and JSON-lines round-trips under explicit
-schemas, and small-files compaction."""
+"""Source/sink behaviour: scoped read confs, small-files compaction
+and layout footers."""
 
 from __future__ import annotations
 
 import glob
 
-from projet_etl_spark.schemas import STAR_SCHEMAS
-from projet_etl_spark.sources.ingest import (
-    compact,
-    read_jsonl,
-    read_orc,
-    write_jdbc,
-    write_jsonl,
-    write_orc,
-)
+from projet_etl_spark.sources.ingest import compact
 from tests.conftest import SF_SMALL
 
 
@@ -44,42 +36,6 @@ def test_events_conf_scoped(spark, tmp_path):
     ).write.parquet(path)
     t = spark.read.parquet(path).schema["t"].dataType
     assert isinstance(t, TimestampType) and not isinstance(t, LongType)
-
-
-def test_orc_roundtrip(spark, tmp_path):
-    src = _docs(spark)
-    path = str(tmp_path / "docs_orc")
-    write_orc(src, path)
-    back = read_orc(spark, path, STAR_SCHEMAS["documents"])
-    assert back.count() == src.count()
-    assert back.schema == STAR_SCHEMAS["documents"]
-    a = {r.doc_id: r.text for r in src.collect()}
-    b = {r.doc_id: r.text for r in back.collect()}
-    assert a == b
-
-
-def test_jsonl_roundtrip(spark, tmp_path):
-    src = _docs(spark)
-    path = str(tmp_path / "docs_jsonl")
-    write_jsonl(src, path)
-    back = read_jsonl(spark, path, STAR_SCHEMAS["documents"])
-    assert back.count() == src.count()
-    assert {r.doc_id for r in back.collect()} == {r.doc_id for r in src.collect()}
-
-
-def test_write_jdbc_surfaces_missing_driver(spark, tmp_path):
-    """No JDBC driver jars ship in this container, so the wrapper must
-    surface the JVM's driver resolution error (with a jar on the
-    classpath the same call writes the table — see docstring)."""
-    import pytest
-
-    with pytest.raises(Exception, match="(?i)driver|jdbc"):
-        write_jdbc(
-            _docs(spark).limit(5),
-            f"jdbc:sqlite:{tmp_path}/out.db",
-            "documents",
-            num_partitions=1,
-        )
 
 
 def test_compact_small_files(spark, tmp_path):

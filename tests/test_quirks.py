@@ -65,21 +65,3 @@ def test_fingerprint_normalizes_whitespace(spark):
     ).select(fingerprint(F.col("text")).alias("fp"))
     fps = [r.fp for r in df.collect()]
     assert fps[0] == fps[1] != fps[2]
-
-
-def test_multimodal_decode_is_stubbed():
-    from projet_etl_spark.operators.multimodal import decode_image
-
-    try:
-        decode_image(b"\x89PNG")
-        raise AssertionError("expected NotImplementedError")
-    except NotImplementedError:
-        pass
-
-
-def test_approx_distinct_close_to_exact(spark):
-    from projet_etl_spark.operators.simple import q_mag_cat, q_mag_cat_approx
-
-    exact = q_mag_cat(spark, SF_SMALL).collect()[0].total_magasins
-    approx = q_mag_cat_approx(spark, SF_SMALL).collect()[0].total_magasins_approx
-    assert abs(approx - exact) / exact < 0.1

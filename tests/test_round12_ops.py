@@ -632,39 +632,63 @@ def test_writer_lock_mutual_exclusion_under_contention(tmp_path):
     must never exist on entry). The TOCTOU classes the advisor named
     — empty-lock window, double-break, foreign release — all
     manifest as two holders at once, which this catches as a torn
-    marker."""
+    marker.
+
+    A contender that meets a live holder retries with jittered
+    exponential backoff until a wall-clock deadline, so a loaded
+    host slows the run down instead of starving a process. Each
+    process reports overlaps, starvations and acquisitions as one
+    JSON line on stdout."""
+    import json
     import subprocess
     import sys
     import textwrap
 
     p = str(tmp_path / "t")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = textwrap.dedent(f"""
-        import os, sys, time
-        sys.path.insert(0, "/root/repo")
+        import json, os, random, sys, time
+        sys.path.insert(0, {repo!r})
         from projet_etl_spark.sources import ingest
         path = {p!r}
         marker = path + ".inside"
-        errors = 0
+        rng = random.Random(os.getpid())
+        overlaps = starved = acquired = 0
         for i in range(5):
-            for attempt in range(2000):
+            deadline = time.monotonic() + 120.0
+            backoff = 0.001
+            while True:
                 try:
                     with ingest._writer_lock(path):
                         if os.path.exists(marker):
-                            errors += 1  # overlap: two holders
+                            overlaps += 1  # two holders at once
                         open(marker, "w").close()
                         time.sleep(0.002)
                         os.remove(marker)
+                    acquired += 1
                     break
                 except ingest.StoreWriterConflict:
-                    time.sleep(0.001)
-            else:
-                errors += 100  # starved: never acquired
-        sys.exit(errors)
+                    if time.monotonic() >= deadline:
+                        starved += 1
+                        break
+                    time.sleep(rng.uniform(0, backoff))
+                    backoff = min(2 * backoff, 0.05)
+        print(json.dumps(dict(
+            overlaps=overlaps, starved=starved, acquired=acquired
+        )))
     """)
     procs = [
-        subprocess.Popen([sys.executable, "-c", script])
+        subprocess.Popen(
+            [sys.executable, "-c", script], stdout=subprocess.PIPE, text=True
+        )
         for _ in range(8)
     ]
-    codes = [pr.wait() for pr in procs]
-    assert codes == [0] * 8, f"mutual exclusion violated/starved: {codes}"
+    reports = []
+    for pr in procs:
+        out, _ = pr.communicate()
+        assert pr.returncode == 0, f"contender exited {pr.returncode}"
+        reports.append(json.loads(out.strip().splitlines()[-1]))
+    assert sum(r["overlaps"] for r in reports) == 0, reports
+    assert sum(r["starved"] for r in reports) == 0, reports
+    assert [r["acquired"] for r in reports] == [5] * 8, reports
     assert not os.path.exists(p + "._writerlock")  # all released

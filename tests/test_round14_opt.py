@@ -39,7 +39,7 @@ def test_score_documents_arrow_twin_is_row_identical(spark):
     row for row — same doc set, same exact integer logit, same IEEE
     score division, same keep verdict (consumers that switched to the
     Arrow shape rely on this equality, and the oracle re-proves it
-    end to end)."""
+    end to end). A null-text document is dropped by both twins."""
     from projet_etl_spark.operators.quality_model import (
         score_documents,
         score_documents_arrow,
@@ -47,6 +47,9 @@ def test_score_documents_arrow_twin_is_row_identical(spark):
     from projet_etl_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
+    docs = docs.unionByName(
+        spark.createDataFrame([(-1, None)], "doc_id long, text string")
+    )
     jvm = sorted(tuple(r) for r in score_documents(docs).collect())
     arrow = sorted(tuple(r) for r in score_documents_arrow(docs).collect())
     assert jvm == arrow

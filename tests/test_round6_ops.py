@@ -1,14 +1,11 @@
 """Round-6 additions: streaming store→query parity as a registry
-entry, and the approx-percentile twin of the decile pattern."""
+entry, and the exact decile boundaries."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from projet_etl_spark.operators.star import (
-    q_customer_spend_deciles,
-    q_customer_spend_deciles_approx,
-)
+from projet_etl_spark.operators.star import q_customer_spend_deciles
 from projet_etl_spark.plans.registry import REGISTRY
 from tests.conftest import SF_SMALL, assert_matches_oracle
 
@@ -40,32 +37,6 @@ def test_daily_counts_store_reuses_fingerprinted_build(spark, tmp_path, monkeypa
     assert os.path.getmtime(store2) == mtime  # no rebuild
     batches = [d for d in os.listdir(store1) if d.startswith("batch=")]
     assert len(batches) >= 2  # genuinely incremental, not one big batch
-
-
-def test_deciles_approx_twin_within_rank_error(spark):
-    """approx_percentile boundary swap: bucket counts must conserve
-    the population and stay within the sketch's rank-error envelope
-    of the exact discrete-order-statistics result."""
-    exact = {
-        r["decile"]: r for r in q_customer_spend_deciles(spark, SF_SMALL).collect()
-    }
-    approx = {
-        r["decile"]: r
-        for r in q_customer_spend_deciles_approx(spark, SF_SMALL).collect()
-    }
-    n_exact = sum(r["n_customers"] for r in exact.values())
-    n_approx = sum(r["n_customers"] for r in approx.values())
-    assert n_exact == n_approx  # every customer lands in exactly one bucket
-    total_exact = sum(r["total_spend"] for r in exact.values())
-    total_approx = sum(r["total_spend"] for r in approx.values())
-    assert total_exact == total_approx  # spend is conserved
-    # rank error <= n/accuracy per boundary; allow 2 customers of
-    # slack per bucket on tiny fixtures
-    tol = max(2, (2 * n_exact) // 1000)
-    for d in range(10):
-        ne = exact[d]["n_customers"] if d in exact else 0
-        na = approx[d]["n_customers"] if d in approx else 0
-        assert abs(ne - na) <= tol, (d, ne, na)
 
 
 def test_deciles_exact_boundaries_are_data_values(spark):

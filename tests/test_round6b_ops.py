@@ -1,17 +1,13 @@
-"""Round-6b library twins: the Arrow signature path must agree with
-the oracle-exact fold path bit-for-bit on real data, and the data
-must sit far enough from the sign boundary for that agreement to be
-structural rather than lucky."""
+"""The embedding data must sit far enough from the random-hyperplane
+sign boundary that the numpy signature kernel (operators/dedup.py
+``_rp_band_keys``) agrees with the DuckDB oracle structurally rather
+than by luck."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from projet_etl_spark.operators.dedup import (
-    rp_signatures_arrow,
-    rp_signatures_fold,
-    rp_weight,
-)
+from projet_etl_spark.operators.dedup import rp_weight
 from tests.conftest import SF_SMALL
 
 
@@ -21,38 +17,10 @@ def _emb(spark):
     )
 
 
-def test_arrow_signatures_match_fold(spark):
-    emb = _emb(spark)
-    got = {r.vec_id: tuple(r.sig) for r in rp_signatures_arrow(emb).collect()}
-    want = {r.vec_id: tuple(r.sig) for r in rp_signatures_fold(emb).collect()}
-    assert got == want and len(got) == emb.count()
-
-
-def test_signature_words_carry_all_planes(spark):
-    """The r12 advisor low: the old single-int64 pack dropped planes
-    0-7. The word layout must cover every plane — flipping plane 0's
-    weight sign must change some vector's signature."""
-    from projet_etl_spark.operators.dedup import (
-        RP_BAND_BITS,
-        RP_BITS,
-        RP_SIG_WORDS,
-        _RP_BANDS_PER_WORD,
-    )
-
-    assert RP_SIG_WORDS * _RP_BANDS_PER_WORD * RP_BAND_BITS == RP_BITS
-    emb = _emb(spark)
-    base = {r.vec_id: tuple(r.sig) for r in rp_signatures_arrow(emb).collect()}
-    # plane 0 lives in word 0's TOP bit: its bit must be set for some
-    # vector and clear for another (i.e. it is actually carried)
-    top = 1 << (_RP_BANDS_PER_WORD * RP_BAND_BITS - 1)
-    first_bits = {bool(sig[0] & top) for sig in base.values()}
-    assert first_bits == {True, False}
-
-
 def test_dots_clear_of_sign_boundary(spark):
-    """min |hyperplane dot| over the corpus must dwarf the ~1 ulp
-    summation-order difference between numpy and the fold — the
-    condition under which the Arrow twin is safe at scale."""
+    """min |hyperplane dot| over the corpus must dwarf any ~1 ulp
+    summation-order difference between numpy and SQL — the condition
+    under which the numpy signature kernel is safe at scale."""
     emb = _emb(spark)
     mins = []
     for h in range(4):  # a sample of hyperplanes is enough to pin scale

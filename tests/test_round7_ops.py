@@ -293,39 +293,6 @@ def test_compacted_postings_survive_interrupted_swap(spark, tmp_path):
     assert after == expected2
 
 
-# --- pluggable image decode hook ---------------------------------------
-
-
-def test_image_codec_hook(spark, monkeypatch):
-    """SPARK_GRAFT_IMAGE_CODEC=module:function lights up the decode
-    path with no code change; unset, the stub stays loud. json:loads
-    is the dependency-free fake codec: payload b'[640,480]' decodes
-    to a (width, height)-indexable value through a REAL executor
-    import."""
-    from pyspark.errors import PythonException
-
-    from projet_etl_spark.operators.multimodal import (
-        DECODED_SCHEMA,
-        IMAGE_CODEC_ENV,
-        decode_image,
-        make_decoded_features,
-    )
-
-    monkeypatch.delenv(IMAGE_CODEC_ENV, raising=False)
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\xff\xd8")
-    df = spark.createDataFrame(
-        [(1, bytearray(b"[640,480]"))], "doc_id long, payload binary"
-    )
-    with pytest.raises(PythonException, match="NotImplementedError"):
-        df.mapInPandas(make_decoded_features(), schema=DECODED_SCHEMA).collect()
-
-    monkeypatch.setenv(IMAGE_CODEC_ENV, "json:loads")
-    assert decode_image(b"[640,480]") == [640, 480]
-    rows = df.mapInPandas(make_decoded_features(), schema=DECODED_SCHEMA).collect()
-    assert [(r.doc_id, r.width, r.height) for r in rows] == [(1, 640, 480)]
-
-
 # --- wscsv task-temp commit protocol -----------------------------------
 
 
@@ -402,21 +369,6 @@ def test_no_rebound_oracle_constants():
                     seen[t.id] += 1
     dupes = [n for n, c in seen.items() if c > 1]
     assert not dupes, f"rebound module-level constants: {dupes}"
-
-
-def test_text_chunks_udtf_twin_equals_sql_chunker(spark):
-    """The Python-UDTF chunker (Spark 4 @udtf + LATERAL, Arrow-batched)
-    must produce row-for-row the pure-SQL posexplode chunker's output —
-    the API-surface twin is pinned, not trusted."""
-    from projet_etl_spark.operators.curation import (
-        q_text_chunks,
-        q_text_chunks_udtf,
-    )
-
-    sql_rows = sorted(map(tuple, q_text_chunks(spark, SF_SMALL).collect()))
-    udtf_rows = sorted(map(tuple, q_text_chunks_udtf(spark, SF_SMALL).collect()))
-    assert udtf_rows == sql_rows
-    assert len(sql_rows) > 0
 
 
 # --- order-statistic percentile formula (property) ---------------------

@@ -65,35 +65,6 @@ def test_sliding_window_matches_oracle_under_non_utc_tz(spark):
     con.close()
 
 
-# --- r7 verdict item 3: guard-mode branches (bisect apparatus) --------
-
-
-def _guard_fixture(spark):
-    from projet_etl_spark.functions.fixedpoint import UnitSum, units
-
-    df = spark.createDataFrame(
-        [(1, 10.00), (1, 99999.99), (2, 5.00)], "k long, v double"
-    )
-    good = [UnitSum("s", units("v"), 2, 10_000_000)]
-    bad = [UnitSum("s", units("v"), 2, 100)]
-    return df, good, bad
-
-
-@pytest.mark.parametrize("mode", ["combined", "persum"])
-def test_fixed_point_guard_fires_in_both_shapes(spark, monkeypatch, mode):
-    """Both guard shapes (r8 OR-fused default, r7 per-sum A/B arm)
-    keep the loud-failure contract: an understated max_units raises
-    instead of returning a silently-wrapped sum."""
-    from projet_etl_spark.functions import fixedpoint
-
-    monkeypatch.setattr(fixedpoint, "_GUARD_MODE", mode)
-    df, good, bad = _guard_fixture(spark)
-    ok = fixedpoint.fixed_point_agg(df, ["k"], good).collect()
-    assert {(r["k"], float(r["s"])) for r in ok} == {(1, 100009.99), (2, 5.0)}
-    with pytest.raises(Exception, match="max_units"):
-        fixedpoint.fixed_point_agg(df, ["k"], bad).collect()
-
-
 # --- r7 verdict item 6: crash DURING compaction, per store ------------
 #
 # swap_publish runs: write tmp -> rename(path, aside) -> rename(tmp,
@@ -329,19 +300,6 @@ def test_bottomk_store_read_is_compaction_invariant(spark):
         for r in REGISTRY["quantiles-hash-sample"].fn(spark, SF_SMALL).collect()
     ]
     assert store == batch
-
-
-def test_fixed_point_guard_off_mode_skips_check(spark, monkeypatch):
-    """The measurement-only 'off' arm: no guard columns, no raise —
-    exists solely so future bisects can price the guard."""
-    from projet_etl_spark.functions import fixedpoint
-
-    monkeypatch.setattr(fixedpoint, "_GUARD_MODE", "off")
-    df, good, bad = _guard_fixture(spark)
-    # even the understated bound returns silently (documented hazard)
-    fixedpoint.fixed_point_agg(df, ["k"], bad).collect()
-    ok = fixedpoint.fixed_point_agg(df, ["k"], good).collect()
-    assert {(r["k"], float(r["s"])) for r in ok} == {(1, 100009.99), (2, 5.0)}
 
 
 # --- staged parity views: refresh contract ----------------------------

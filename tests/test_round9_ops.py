@@ -97,49 +97,6 @@ def test_store_readers_recover_interrupted_swap(spark, tmp_path):
     assert rows == {(1, 10), (2, 20)}
 
 
-# --- ADVICE: fixed-point guard env validation --------------------------
-
-
-def test_fxp_guard_env_rejects_unknown_value():
-    import subprocess
-    import sys
-
-    code = (
-        "import projet_etl_spark.functions.fixedpoint as f"
-    )
-    r = subprocess.run(
-        [sys.executable, "-c", code],
-        env={**os.environ, "SPARK_GRAFT_FXP_GUARD": "OFF"},
-        capture_output=True,
-        text=True,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
-    assert r.returncode != 0
-    assert "SPARK_GRAFT_FXP_GUARD" in r.stderr
-
-
-def test_fxp_guard_env_off_warns():
-    import subprocess
-    import sys
-
-    code = (
-        "import warnings\n"
-        "with warnings.catch_warnings(record=True) as w:\n"
-        "    warnings.simplefilter('always')\n"
-        "    import projet_etl_spark.functions.fixedpoint as f\n"
-        "assert any('overflow guard' in str(x.message) for x in w), w\n"
-        "assert f._GUARD_MODE == 'off'\n"
-    )
-    r = subprocess.run(
-        [sys.executable, "-c", code],
-        env={**os.environ, "SPARK_GRAFT_FXP_GUARD": "off"},
-        capture_output=True,
-        text=True,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
-    assert r.returncode == 0, r.stderr
-
-
 # --- verdict item 3: rules-vs-model fused into one scan -----------------
 
 
